@@ -1,11 +1,35 @@
-"""Weighted-moment Column-expression kernels.
+"""Weighted-moment kernels, built as Spark SQL expression text.
 
 This is the numerical heart of the engine — the PySpark analog of the
 reference's ``_stats.py`` (``/root/reference/src/pandas_weights/_stats.py:14-73``).
 Every weighted statistic (global, grouped, resampled, streaming) is built
-from these *lazy* Column expressions, so Catalyst compiles each statistic
-into a single partial+final aggregate pass (one shuffle per grouping) with
+from these *lazy* expressions, so Catalyst compiles each statistic into a
+single partial+final aggregate pass (one shuffle per grouping) with
 whole-stage codegen — no Python in the hot path.
+
+Kernels are written once against a small Column-style vocabulary
+(``+ - * / >= & ~``, ``isNotNull``, :func:`when`, :func:`call`) and take
+their inputs either as :class:`Sql` text or as ``Column`` objects:
+
+* **SQL text in → SQL text out.** The aggregate layers (frame, groupby,
+  resample, streaming, pivot, corr) pass :class:`Sql` operands — the
+  frame's :meth:`~pandas_weights_spark.frame.WeightedDataFrame._value_sql`
+  and :data:`~pandas_weights_spark.frame.WEIGHT_SQL` — so building a plan is pure Python string work,
+  and each output column crosses to the JVM once, as one parsed
+  ``F.expr`` (:func:`named`). Building the same tree from Column
+  operators costs one py4j round trip per node (thousands for a
+  ``corr_cov`` matrix).
+* **Column in → Column out.** Callers whose operands only exist as
+  Columns (window aggregates in ``rolling``, masked values in
+  ``inference``, the salted/moment paths in ``groupby``) get a Column
+  back; text literals inside the formula become ``F.expr`` leaves.
+
+The text keeps the Column operators' operand order and association
+(every binary operator is parenthesised), so Catalyst sees the same
+trees either way and results are bit-identical. Literals render as
+``1.0D`` (DOUBLE — a bare ``1.0`` is DECIMAL in Spark SQL), integers as
+INT, and identifiers are backtick-quoted (:func:`quote`), so column
+names with dots, spaces or backticks need no special care.
 
 Semantics reproduced from the reference:
 
@@ -24,16 +48,30 @@ Semantics reproduced from the reference:
   non-positive variance — each guard yields NULL (reference yields NaN;
   we use NULL as the engine-wide missing value, see README).
 
-Divide-by-zero is expressed with ``F.try_divide`` so the kernels behave
+Divide-by-zero is expressed with ``try_divide`` so the kernels behave
 identically under ANSI and legacy SQL modes (Spark 4 defaults ANSI on).
 """
 
 from __future__ import annotations
 
+import math
+import operator
+from typing import Union
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
+    "Sql",
+    "Expr",
+    "quote",
+    "ident",
+    "str_lit",
+    "lit",
+    "call",
+    "when",
+    "named",
+    "to_column",
     "w_count",
     "w_sum",
     "w_sum_of_squares",
@@ -52,11 +90,171 @@ __all__ = [
 _INF = float("inf")
 
 
-def _zero() -> Column:
-    return F.lit(0.0)
+# --- SQL text vocabulary ----------------------------------------------------
 
 
-def w_count(x: Column, w: Column, *, skipna: bool = True) -> Column:
+def quote(name: str) -> str:
+    """Backtick-quoted identifier; embedded backticks are doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def str_lit(value: str) -> str:
+    """Single-quoted SQL string literal (backslash escapes, Spark's
+    default string-literal syntax)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _text(value) -> str:
+    if isinstance(value, Sql):
+        return value.text
+    if isinstance(value, int):
+        return str(value)
+    if isinstance(value, float):
+        if math.isnan(value):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(value):
+            return "CAST('%sInfinity' AS DOUBLE)" % ("-" if value < 0 else "")
+        return f"{value!r}D"
+    raise TypeError(f"cannot render {value!r} as SQL; wrap it in Sql/ident/lit")
+
+
+_PY_OPS = {
+    "+": operator.add,
+    "-": operator.sub,
+    "*": operator.mul,
+    "/": operator.truediv,
+    ">=": operator.ge,
+    ">": operator.gt,
+    "!=": operator.ne,
+    "AND": operator.and_,
+}
+
+
+class Sql:
+    """A Spark SQL expression as text, with the Column operators.
+
+    Every binary operator is parenthesised, so ``a * b * c`` renders
+    ``((a * b) * c)`` — the same left-associated tree the Column
+    operators build. Python numbers render as literals; a ``Column``
+    operand turns the result into a Column (this side via ``F.expr``).
+    """
+
+    __slots__ = ("text",)
+
+    def __init__(self, text: str) -> None:
+        self.text = text
+
+    def __str__(self) -> str:
+        return self.text
+
+    def __repr__(self) -> str:
+        return f"Sql({self.text!r})"
+
+    def _op(self, op: str, other, reflected: bool = False):
+        if isinstance(other, Column):
+            a, b = F.expr(self.text), other
+            return _PY_OPS[op](b, a) if reflected else _PY_OPS[op](a, b)
+        a, b = self.text, _text(other)
+        if reflected:
+            a, b = b, a
+        return Sql(f"({a} {op} {b})")
+
+    def __add__(self, o):
+        return self._op("+", o)
+
+    def __radd__(self, o):
+        return self._op("+", o, True)
+
+    def __sub__(self, o):
+        return self._op("-", o)
+
+    def __mul__(self, o):
+        return self._op("*", o)
+
+    def __truediv__(self, o):
+        return self._op("/", o)
+
+    def __ge__(self, o):
+        return self._op(">=", o)
+
+    def __gt__(self, o):
+        return self._op(">", o)
+
+    def __ne__(self, o):  # type: ignore[override]
+        return self._op("!=", o)
+
+    def __and__(self, o):
+        return self._op("AND", o)
+
+    def __invert__(self) -> "Sql":
+        return Sql(f"(NOT {self.text})")
+
+    def isNotNull(self) -> "Sql":
+        return Sql(f"({self.text} IS NOT NULL)")
+
+    def cast(self, type_name: str) -> "Sql":
+        return Sql(f"CAST({self.text} AS {type_name.upper()})")
+
+
+#: A kernel operand/result: SQL text or a Column.
+Expr = Union[Sql, Column]
+
+
+def ident(name: str) -> Sql:
+    """Column reference by name (quoted, so dots are not struct access)."""
+    return Sql(quote(name))
+
+
+def lit(value) -> Sql:
+    """A literal operand (``0.0`` → ``0.0D``)."""
+    return Sql(_text(value))
+
+
+def to_column(value) -> Column:
+    """Column form of a kernel operand (one ``F.expr`` for text)."""
+    if isinstance(value, Column):
+        return value
+    if isinstance(value, Sql):
+        return F.expr(value.text)
+    return F.lit(value)
+
+
+#: SQL function name → ``pyspark.sql.functions`` builder, where they differ
+_F_NAMES = {"ln": "log"}
+
+
+def call(name: str, *args) -> Expr:
+    """SQL function call ``name(args…)``; a Column among the arguments
+    makes it ``F.<name>(…)`` instead."""
+    if any(isinstance(a, Column) for a in args):
+        fn = getattr(F, _F_NAMES.get(name, name))
+        return fn(*[to_column(a) for a in args])
+    return Sql(f"{name}({', '.join(_text(a) for a in args)})")
+
+
+def when(cond, value) -> Expr:
+    """``CASE WHEN cond THEN value END`` (``F.when`` for Columns)."""
+    if isinstance(cond, Column) or isinstance(value, Column):
+        return F.when(to_column(cond), to_column(value))
+    return Sql(f"CASE WHEN {_text(cond)} THEN {_text(value)} END")
+
+
+def named(expr: Expr, name: str) -> Column:
+    """The output column ``expr AS name`` — one parsed ``F.expr`` for
+    text, ``alias`` for a Column."""
+    if isinstance(expr, Column):
+        return expr.alias(name)
+    return F.expr(f"{_text(expr)} AS {quote(name)}")
+
+
+# --- kernels ------------------------------------------------------------------
+
+
+def _zero() -> Sql:
+    return lit(0.0)
+
+
+def w_count(x: Expr, w: Expr, *, skipna: bool = True) -> Expr:
     """Weighted count: ``Σ w · 1[x IS NOT NULL]`` (frame.py:189-213).
 
     ``skipna=False`` counts every row's weight regardless of ``x``.
@@ -64,48 +262,52 @@ def w_count(x: Column, w: Column, *, skipna: bool = True) -> Column:
     matching pandas ``sum`` with default ``min_count=0``.
     """
     if skipna:
-        expr = F.sum(F.when(x.isNotNull(), w))
+        expr = call("sum", when(x.isNotNull(), w))
     else:
-        expr = F.sum(w)
-    return F.coalesce(expr, _zero())
+        expr = call("sum", w)
+    return call("coalesce", expr, _zero())
 
 
-def w_sum(x: Column, w: Column, *, min_count: int = 0) -> Column:
+def w_sum(x: Expr, w: Expr, *, min_count: int = 0) -> Expr:
     """Weighted sum ``Σ w·x`` with pandas ``min_count`` (frame.py:215-220).
 
-    The product is NULL when either side is NULL, so ``F.count`` of the
+    The product is NULL when either side is NULL, so ``count`` of the
     product equals pandas' count of non-NA weighted values.
     """
     prod = x * w
-    total = F.coalesce(F.sum(prod), _zero())
+    total = call("coalesce", call("sum", prod), _zero())
     if min_count > 0:
-        return F.when(F.count(prod) >= F.lit(min_count), total)
+        return when(call("count", prod) >= min_count, total)
     return total
 
 
-def w_sum_of_squares(x: Column, w: Column, *, min_count: int = 1) -> Column:
+def w_sum_of_squares(x: Expr, w: Expr, *, min_count: int = 1) -> Expr:
     """``Σ w·x²`` (_stats.py:14-21; default min_count=1 as in reference)."""
     return w_sum(x * x, w, min_count=min_count)
 
 
-def w_mean(x: Column, w: Column, *, skipna: bool = True) -> Column:
+def w_mean(x: Expr, w: Expr, *, skipna: bool = True) -> Expr:
     """Weighted mean = ``sum(min_count=1) / count(skipna)`` (frame.py:222-229)."""
-    return F.try_divide(w_sum(x, w, min_count=1), w_count(x, w, skipna=skipna))
+    return call(
+        "try_divide", w_sum(x, w, min_count=1), w_count(x, w, skipna=skipna)
+    )
 
 
 def variance_from_weighted_moments(
-    ws: Column, wss: Column, wc: Column, *, ddof: int = 1
-) -> Column:
+    ws: Expr, wss: Expr, wc: Expr, *, ddof: int = 1
+) -> Expr:
     """``(Σwx² − (Σwx)²/W) / (W − ddof)`` (_stats.py:24-33).
 
     Pure arithmetic on already-aggregated moment columns — reused by the
-    global, grouped, resampled, and streaming variance paths, exactly as
-    the reference shares one helper across all three.
+    global, grouped, resampled, rolling and streaming variance paths,
+    exactly as the reference shares one helper across all three.
     """
-    return F.try_divide(wss - F.try_divide(ws * ws, wc), wc - F.lit(float(ddof)))
+    return call(
+        "try_divide", wss - call("try_divide", ws * ws, wc), wc - float(ddof)
+    )
 
 
-def w_var(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
+def w_var(x: Expr, w: Expr, *, ddof: int = 1, skipna: bool = True) -> Expr:
     """Weighted variance in moment form (frame.py:231-241)."""
     return variance_from_weighted_moments(
         w_sum(x, w, min_count=1),
@@ -115,34 +317,34 @@ def w_var(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column
     )
 
 
-def w_std(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
+def w_std(x: Expr, w: Expr, *, ddof: int = 1, skipna: bool = True) -> Expr:
     """Weighted standard deviation = ``sqrt(var)`` (frame.py:243-251).
 
     Negative variance (catastrophic cancellation) yields NULL rather than
     NaN so downstream hashing/joins treat it as missing.
     """
     v = w_var(x, w, ddof=ddof, skipna=skipna)
-    return F.when(v >= 0, F.sqrt(v))
+    return when(v >= 0, call("sqrt", v))
 
 
-def w_min(x: Column, w: Column) -> Column:
+def w_min(x: Expr, w: Expr) -> Expr:
     """Minimum observed value carrying probability mass: rows with NULL
     ``x`` or NULL/non-positive weight are excluded — the same mass rule
     as the weighted-quantile family (quantile.py), of which min is the
     q→0⁺ limit. Extension beyond the reference (used by describe())."""
-    return F.min(F.when(w.isNotNull() & (w > 0), x))
+    return call("min", when(w.isNotNull() & (w > 0), x))
 
 
-def w_max(x: Column, w: Column) -> Column:
+def w_max(x: Expr, w: Expr) -> Expr:
     """Maximum observed value carrying probability mass (the q=1
     weighted quantile); same mass rule as :func:`w_min`."""
-    return F.max(F.when(w.isNotNull() & (w > 0), x))
+    return call("max", when(w.isNotNull() & (w > 0), x))
 
 
 # --- weighted higher moments (extensions beyond the reference) -------------
 
 
-def _central_moments(x: Column, w: Column, *, skipna: bool, upto: int):
+def _central_moments(x: Expr, w: Expr, *, skipna: bool, upto: int):
     """Weighted central moments via raw power sums: one aggregate pass.
 
     ``Sk = Σ w·x^k`` with the kernel's left-associated product order
@@ -150,29 +352,29 @@ def _central_moments(x: Column, w: Column, *, skipna: bool, upto: int):
     IEEE results are bit-identical.
     """
     W = w_count(x, w, skipna=skipna)
-    s1 = F.try_divide(w_sum(x, w, min_count=1), W)  # μ
-    s2w = F.try_divide(w_sum(x * x, w, min_count=1), W)
+    s1 = call("try_divide", w_sum(x, w, min_count=1), W)  # μ
+    s2w = call("try_divide", w_sum(x * x, w, min_count=1), W)
     mu = s1
     m2 = s2w - mu * mu
     out = {"W": W, "mu": mu, "m2": m2, "s2w": s2w}
     if upto >= 3:
-        s3w = F.try_divide(w_sum(x * x * x, w, min_count=1), W)
+        s3w = call("try_divide", w_sum(x * x * x, w, min_count=1), W)
         out["s3w"] = s3w
-        out["m3"] = s3w - F.lit(3.0) * mu * s2w + F.lit(2.0) * mu * mu * mu
+        out["m3"] = s3w - lit(3.0) * mu * s2w + lit(2.0) * mu * mu * mu
     if upto >= 4:
-        s4w = F.try_divide(w_sum(x * x * x * x, w, min_count=1), W)
+        s4w = call("try_divide", w_sum(x * x * x * x, w, min_count=1), W)
         out["m4"] = (
             s4w
-            - F.lit(4.0) * mu * out["s3w"]
-            + F.lit(6.0) * mu * mu * s2w
-            - F.lit(3.0) * mu * mu * mu * mu
+            - lit(4.0) * mu * out["s3w"]
+            + lit(6.0) * mu * mu * s2w
+            - lit(3.0) * mu * mu * mu * mu
         )
     return out
 
 
 def w_sem(
-    x: Column, w: Column, *, ddof: int = 1, skipna: bool = True
-) -> Column:
+    x: Expr, w: Expr, *, ddof: int = 1, skipna: bool = True
+) -> Expr:
     """Weighted standard error of the mean: ``std / sqrt(W)`` with the
     weighted count ``W`` in the role pandas' ``n`` plays
     (``DataFrame.sem`` analog under the frequency-weights convention;
@@ -180,26 +382,28 @@ def w_sem(
     ddof, non-positive variance)."""
     sd = w_std(x, w, ddof=ddof, skipna=skipna)
     W = w_count(x, w, skipna=skipna)
-    return F.when(W > 0, F.try_divide(sd, F.sqrt(W)))
+    return when(W > 0, call("try_divide", sd, call("sqrt", W)))
 
 
-def w_skew(x: Column, w: Column, *, skipna: bool = True) -> Column:
+def w_skew(x: Expr, w: Expr, *, skipna: bool = True) -> Expr:
     """Weighted skewness ``m3 / m2^1.5`` (population / biased definition,
     the frequency-weights analog of ``scipy.stats.skew(bias=True)``).
     Extension beyond the reference; NULL when ``W <= 0`` or ``m2 <= 0``."""
     m = _central_moments(x, w, skipna=skipna, upto=3)
     ok = (m["W"] > 0) & (m["m2"] > 0)
-    return F.when(ok, F.try_divide(m["m3"], m["m2"] * F.sqrt(m["m2"])))
+    return when(
+        ok, call("try_divide", m["m3"], m["m2"] * call("sqrt", m["m2"]))
+    )
 
 
-def w_kurt(x: Column, w: Column, *, skipna: bool = True) -> Column:
+def w_kurt(x: Expr, w: Expr, *, skipna: bool = True) -> Expr:
     """Weighted excess kurtosis ``m4 / m2² − 3`` (population / biased
     definition). Extension beyond the reference; NULL when ``W <= 0`` or
     ``m2 <= 0``."""
     m = _central_moments(x, w, skipna=skipna, upto=4)
     ok = (m["W"] > 0) & (m["m2"] > 0)
-    return F.when(
-        ok, F.try_divide(m["m4"], m["m2"] * m["m2"]) - F.lit(3.0)
+    return when(
+        ok, call("try_divide", m["m4"], m["m2"] * m["m2"]) - lit(3.0)
     )
 
 
@@ -210,7 +414,7 @@ def w_kurt(x: Column, w: Column, *, skipna: bool = True) -> Column:
 CORR_MOMENTS = ("n", "w", "wx", "wy", "wxy", "wxx", "wyy")
 
 
-def corr_moment_exprs(x: Column, y: Column, w: Column) -> dict[str, Column]:
+def corr_moment_exprs(x: Expr, y: Expr, w: Expr) -> dict[str, Expr]:
     """The seven aggregate moments of one correlation pair.
 
     All moments are computed under the pair's joint validity mask
@@ -218,62 +422,65 @@ def corr_moment_exprs(x: Column, y: Column, w: Column) -> dict[str, Column]:
     pair in a matrix is "pairwise complete" exactly like the reference.
     """
     valid = x.isNotNull() & y.isNotNull() & w.isNotNull()
-    wv = F.when(valid, w)
+    wv = when(valid, w)
     return {
-        "n": F.count(F.when(valid, F.lit(1))),
-        "w": F.sum(wv),
-        "wx": F.sum(wv * x),
-        "wy": F.sum(wv * y),
-        "wxy": F.sum(wv * x * y),
-        "wxx": F.sum(wv * x * x),
-        "wyy": F.sum(wv * y * y),
+        "n": call("count", when(valid, lit(1))),
+        "w": call("sum", wv),
+        "wx": call("sum", wv * x),
+        "wy": call("sum", wv * y),
+        "wxy": call("sum", wv * x * y),
+        "wxx": call("sum", wv * x * x),
+        "wyy": call("sum", wv * y * y),
     }
 
 
+def _moments_ok(n: Expr, w: Expr, ddof: int, min_periods: int) -> Expr:
+    """The corr/cov guard chain shared by both assemblies."""
+    return (
+        (n >= min_periods)
+        & w.isNotNull()
+        & ~call("isnan", w)
+        & (call("abs", w) != _INF)
+        & (w > float(ddof))
+    )
+
+
 def corr_from_moments(
-    n: Column,
-    w: Column,
-    wx: Column,
-    wy: Column,
-    wxy: Column,
-    wxx: Column,
-    wyy: Column,
+    n: Expr,
+    w: Expr,
+    wx: Expr,
+    wy: Expr,
+    wxy: Expr,
+    wxx: Expr,
+    wyy: Expr,
     *,
     ddof: int = 1,
     min_periods: int = 1,
-) -> Column:
+) -> Expr:
     """Assemble weighted Pearson r from aggregated moments (_stats.py:36-73).
 
     Guard chain (each failure → NULL, reference returns NaN):
     ``n < min_periods``; ``W`` NULL/NaN/±inf; ``W <= ddof``;
     ``var_x <= 0`` or ``var_y <= 0``.
     """
-    denom = w - F.lit(float(ddof))
-    cov = F.try_divide(wxy - F.try_divide(wx * wy, w), denom)
-    var_x = F.try_divide(wxx - F.try_divide(wx * wx, w), denom)
-    var_y = F.try_divide(wyy - F.try_divide(wy * wy, w), denom)
-    ok = (
-        (n >= F.lit(min_periods))
-        & w.isNotNull()
-        & ~F.isnan(w)
-        & (F.abs(w) != F.lit(_INF))
-        & (w > F.lit(float(ddof)))
-        & (var_x > 0)
-        & (var_y > 0)
-    )
-    return F.when(ok, F.try_divide(cov, F.sqrt(var_x * var_y)))
+    denom = w - float(ddof)
+    cov = call("try_divide", wxy - call("try_divide", wx * wy, w), denom)
+    var_x = call("try_divide", wxx - call("try_divide", wx * wx, w), denom)
+    var_y = call("try_divide", wyy - call("try_divide", wy * wy, w), denom)
+    ok = _moments_ok(n, w, ddof, min_periods) & (var_x > 0) & (var_y > 0)
+    return when(ok, call("try_divide", cov, call("sqrt", var_x * var_y)))
 
 
 def cov_from_moments(
-    n: Column,
-    w: Column,
-    wx: Column,
-    wy: Column,
-    wxy: Column,
+    n: Expr,
+    w: Expr,
+    wx: Expr,
+    wy: Expr,
+    wxy: Expr,
     *,
     ddof: int = 1,
     min_periods: int = 1,
-) -> Column:
+) -> Expr:
     """Weighted covariance from aggregated moments:
     ``(Σwxy − ΣwxΣwy/W) / (W − ddof)``, frequency-weights ddof as in
     :func:`variance_from_weighted_moments`. Extension beyond the
@@ -281,37 +488,30 @@ def cov_from_moments(
     chain minus the positive-variance checks, which only protect corr's
     denominator.
     """
-    denom = w - F.lit(float(ddof))
-    cov = F.try_divide(wxy - F.try_divide(wx * wy, w), denom)
-    ok = (
-        (n >= F.lit(min_periods))
-        & w.isNotNull()
-        & ~F.isnan(w)
-        & (F.abs(w) != F.lit(_INF))
-        & (w > F.lit(float(ddof)))
-    )
-    return F.when(ok, cov)
+    denom = w - float(ddof)
+    cov = call("try_divide", wxy - call("try_divide", wx * wy, w), denom)
+    return when(_moments_ok(n, w, ddof, min_periods), cov)
 
 
-def w_gmean(x: Column, w: Column) -> Column:
+def w_gmean(x: Expr, w: Expr) -> Expr:
     """Weighted geometric mean ``exp(Σ w·ln x / Σ w)`` over rows with
     positive value AND positive weight (the only domain where the
     geometric mean is defined; scipy ``gmean`` analog under frequency
     weights — unit weights reproduce it exactly). NULL when no mass
     qualifies."""
     ok = x.isNotNull() & w.isNotNull() & (x > 0) & (w > 0)
-    m = F.when(ok, w)
-    W = F.coalesce(F.sum(m), F.lit(0.0))
-    s = F.sum(m * F.log(x))
-    return F.when(W > 0, F.exp(F.try_divide(s, W)))
+    m = when(ok, w)
+    W = call("coalesce", call("sum", m), _zero())
+    s = call("sum", m * call("ln", x))
+    return when(W > 0, call("exp", call("try_divide", s, W)))
 
 
-def w_hmean(x: Column, w: Column) -> Column:
+def w_hmean(x: Expr, w: Expr) -> Expr:
     """Weighted harmonic mean ``Σw / Σ(w/x)`` over rows with positive
     value and weight (rates/speeds aggregation; scipy ``hmean`` analog
     under frequency weights). NULL when no mass qualifies."""
     ok = x.isNotNull() & w.isNotNull() & (x > 0) & (w > 0)
-    m = F.when(ok, w)
-    W = F.coalesce(F.sum(m), F.lit(0.0))
-    s = F.sum(m / x)
-    return F.when(W > 0, F.try_divide(W, s))
+    m = when(ok, w)
+    W = call("coalesce", call("sum", m), _zero())
+    s = call("sum", m / x)
+    return when(W > 0, call("try_divide", W, s))

@@ -28,10 +28,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pandas_weights_spark._stats import (
+    Sql,
     corr_from_moments,
     corr_moment_exprs,
     cov_from_moments,
+    ident,
+    named,
+    quote,
+    str_lit,
 )
+from pandas_weights_spark.frame import WEIGHT_SQL
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -74,34 +80,32 @@ def _pair_moment_exprs(
     names: Optional[Sequence[str]] = None,
 ) -> list[Column]:
     """Aggregate expressions for every i<=j pair's moments (all seven by
-    default; cov passes the five it needs so the extra sums never run)."""
-    w = wdf.weights
+    default; cov passes the five it needs so the extra sums never run),
+    each one parsed ``F.expr`` of the kernel's SQL text."""
+    vals = [wdf._value_sql(c) for c in cols]
     exprs: list[Column] = []
-    for i, cx in enumerate(cols):
-        x = wdf._value(cx)
+    for i, x in enumerate(vals):
         for j in range(i, len(cols)):
-            cy = cols[j]
-            y = wdf._value(cy)
-            for name, expr in corr_moment_exprs(x, y, w).items():
+            for name, expr in corr_moment_exprs(x, vals[j], WEIGHT_SQL).items():
                 if names is not None and name not in names:
                     continue
-                exprs.append(expr.alias(f"__m_{i}_{j}_{name}"))
+                exprs.append(named(expr, f"__m_{i}_{j}_{name}"))
     return exprs
 
 
 _COV_MOMENTS = ("n", "w", "wx", "wy", "wxy")
 
 
-def _pair_corr(i: int, j: int, ddof: int, min_periods: int) -> Column:
-    m = lambda name: F.col(f"__m_{i}_{j}_{name}")  # noqa: E731
+def _pair_corr(i: int, j: int, ddof: int, min_periods: int) -> Sql:
+    m = lambda name: ident(f"__m_{i}_{j}_{name}")  # noqa: E731
     return corr_from_moments(
         m("n"), m("w"), m("wx"), m("wy"), m("wxy"), m("wxx"), m("wyy"),
         ddof=ddof, min_periods=min_periods,
     )
 
 
-def _pair_cov(i: int, j: int, swap: bool, ddof: int, min_periods: int) -> Column:
-    m = lambda name: F.col(f"__m_{i}_{j}_{name}")  # noqa: E731
+def _pair_cov(i: int, j: int, swap: bool, ddof: int, min_periods: int) -> Sql:
+    m = lambda name: ident(f"__m_{i}_{j}_{name}")  # noqa: E731
     # cov(x, y) is symmetric, but the mirror entry's (wx, wy) swap keeps
     # the formula's float evaluation identical either way
     wx, wy = (m("wy"), m("wx")) if swap else (m("wx"), m("wy"))
@@ -110,30 +114,29 @@ def _pair_cov(i: int, j: int, swap: bool, ddof: int, min_periods: int) -> Column
     )
 
 
-def _pair_structs(
+def _pair_rows(
     cols: Sequence[str],
     ddof: int,
     min_periods: int,
-    stat: str = "corr",
-) -> list[Column]:
-    """One struct per *ordered* pair; the j<i mirror reuses the i<=j moments
-    (symmetry exploitation as in reference frame.py:272-283)."""
+    stats: Sequence[str] = ("corr",),
+) -> Column:
+    """The long ``(col_x, col_y, <stats>…)`` rows of every *ordered*
+    pair, as ONE ``inline(array(struct…))`` expression over the
+    ``__m_{i}_{j}_*`` moment columns; the j<i mirror reuses the i<=j
+    moments (symmetry exploitation as in reference frame.py:272-283)."""
     structs = []
     for i, cx in enumerate(cols):
         for j, cy in enumerate(cols):
             lo, hi = (i, j) if i <= j else (j, i)
-            if stat == "corr":
-                val = _pair_corr(lo, hi, ddof, min_periods)
-            else:
-                val = _pair_cov(lo, hi, j < i, ddof, min_periods)
-            structs.append(
-                F.struct(
-                    F.lit(cx).alias("col_x"),
-                    F.lit(cy).alias("col_y"),
-                    val.alias(stat),
-                )
-            )
-    return structs
+            fields = [f"{str_lit(cx)} AS col_x", f"{str_lit(cy)} AS col_y"]
+            for stat in stats:
+                if stat == "corr":
+                    val = _pair_corr(lo, hi, ddof, min_periods)
+                else:
+                    val = _pair_cov(lo, hi, j < i, ddof, min_periods)
+                fields.append(f"{val} AS {quote(stat)}")
+            structs.append(f"struct({', '.join(fields)})")
+    return F.expr(f"inline(array({', '.join(structs)}))")
 
 
 def frame_corr(
@@ -149,9 +152,7 @@ def frame_corr(
     if not cols:
         raise ValueError("no numeric columns to correlate")
     moments = wdf.df.agg(*_pair_moment_exprs(wdf, cols))
-    return moments.select(
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods)))
-    )
+    return moments.select(_pair_rows(cols, ddof, min_periods))
 
 
 def corr_pair(
@@ -172,15 +173,14 @@ def corr_pair(
     :func:`corr_from_moments` kernel. Output: one row ``(corr)``.
     """
     _check_method(method)
-    w = wdf.weights
-    x = wdf._value(x_col)
-    y = wdf._value(y_col)
+    x = wdf._value_sql(x_col)
+    y = wdf._value_sql(y_col)
     moments = [
-        expr.alias(f"__m_0_1_{name}")
-        for name, expr in corr_moment_exprs(x, y, w).items()
+        named(expr, f"__m_0_1_{name}")
+        for name, expr in corr_moment_exprs(x, y, WEIGHT_SQL).items()
     ]
     return wdf.df.agg(*moments).select(
-        _pair_corr(0, 1, ddof, min_periods).alias("corr")
+        named(_pair_corr(0, 1, ddof, min_periods), "corr")
     )
 
 
@@ -205,9 +205,7 @@ def grouped_corr(
     moments = df.groupBy(*[F.col(k) for k in keys]).agg(
         *_pair_moment_exprs(wdf, cols)
     )
-    out = moments.select(
-        *keys, F.inline(F.array(*_pair_structs(cols, ddof, min_periods)))
-    )
+    out = moments.select(*keys, _pair_rows(cols, ddof, min_periods))
     if sort:
         out = out.orderBy(*keys, "col_x", "col_y")
     return out
@@ -229,9 +227,7 @@ def frame_cov(
     if not cols:
         raise ValueError("no numeric columns to covary")
     moments = wdf.df.agg(*_pair_moment_exprs(wdf, cols, names=_COV_MOMENTS))
-    return moments.select(
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods, stat="cov")))
-    )
+    return moments.select(_pair_rows(cols, ddof, min_periods, ("cov",)))
 
 
 def grouped_cov(
@@ -254,8 +250,7 @@ def grouped_cov(
         *_pair_moment_exprs(wdf, cols, names=_COV_MOMENTS)
     )
     out = moments.select(
-        *keys,
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods, stat="cov"))),
+        *keys, _pair_rows(cols, ddof, min_periods, ("cov",))
     )
     if sort:
         out = out.orderBy(*keys, "col_x", "col_y")
@@ -281,19 +276,9 @@ def frame_corr_cov(
     if not cols:
         raise ValueError("no numeric columns to correlate")
     moments = wdf.df.agg(*_pair_moment_exprs(wdf, cols))
-    structs = []
-    for i, cx in enumerate(cols):
-        for j, cy in enumerate(cols):
-            lo, hi = (i, j) if i <= j else (j, i)
-            structs.append(
-                F.struct(
-                    F.lit(cx).alias("col_x"),
-                    F.lit(cy).alias("col_y"),
-                    _pair_corr(lo, hi, ddof, min_periods).alias("corr"),
-                    _pair_cov(lo, hi, j < i, ddof, min_periods).alias("cov"),
-                )
-            )
-    return moments.select(F.inline(F.array(*structs)))
+    return moments.select(
+        _pair_rows(cols, ddof, min_periods, ("corr", "cov"))
+    )
 
 
 def aligned_corr(
@@ -847,9 +832,7 @@ def spearman_matrix(
             ).items():
                 exprs.append(expr.alias(f"__m_{i}_{l}_{name}"))
     moments = ranked.agg(*exprs)
-    return moments.select(
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods)))
-    )
+    return moments.select(_pair_rows(cols, ddof, min_periods))
 
 
 def to_matrix(long_form: DataFrame) -> "pd.DataFrame":

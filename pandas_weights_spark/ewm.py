@@ -55,6 +55,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pandas_weights_spark.rolling import as_refs
+
 __all__ = ["WeightedEWM"]
 
 _ColRef = Union[str, Column]
@@ -113,6 +115,8 @@ class WeightedEWM:
         ignore_na: bool = False,
         times: Optional[str] = None,
     ) -> None:
+        order_by = as_refs(order_by)
+        partition_by = as_refs(partition_by)
         if any(not isinstance(r, str) for r in partition_by):
             raise ValueError("ewm partition_by entries must be column names")
         self._wdf = wdf

@@ -29,10 +29,17 @@ from pyspark.sql import types as T
 
 from pandas_weights_spark import _stats
 
-__all__ = ["wt", "WeightedDataFrame", "WeightedSeries", "WEIGHT_COL"]
+__all__ = [
+    "wt", "WeightedDataFrame", "WeightedSeries", "WEIGHT_COL", "WEIGHT_SQL",
+]
 
 #: Reserved internal name for the materialized weight expression.
 WEIGHT_COL = "__pw_weight__"
+
+#: The bound weight as a kernel operand (SQL text).
+WEIGHT_SQL = _stats.ident(WEIGHT_COL)
+
+_NULL_DOUBLE = _stats.Sql("CAST(NULL AS DOUBLE)")
 
 _NUMERIC_TYPES = (T.NumericType, T.BooleanType)
 
@@ -104,7 +111,7 @@ class WeightedDataFrame:
         if isinstance(weights, str):
             if weights not in df.columns:
                 raise KeyError(f"weight column {weights!r} not in DataFrame")
-            w = F.col(weights).cast("double")
+            w = _stats.ident(weights).cast("double")
             data_cols = [c for c in df.columns if c != weights]
         elif isinstance(weights, Column):
             w = weights.cast("double")
@@ -116,13 +123,13 @@ class WeightedDataFrame:
                 "DataFrame (no row index — see README 'Divergences')"
             )
         if nan_as_null:
-            w = F.nanvl(w, F.lit(None).cast("double"))
+            w = _stats.call("nanvl", w, _NULL_DOUBLE)
         if na_weight is not None:
-            w = F.coalesce(w, F.lit(float(na_weight)))
+            w = _stats.call("coalesce", w, float(na_weight))
 
         # Materialize the weight once under a reserved name; Catalyst prunes
         # it wherever unused, so this costs nothing at scan time.
-        self._df = df.withColumn(WEIGHT_COL, w)
+        self._df = df.withColumn(WEIGHT_COL, _stats.to_column(w))
         self._nan_as_null = nan_as_null
         if _data_cols is not None:
             data_cols = _data_cols
@@ -167,22 +174,36 @@ class WeightedDataFrame:
         by_name = {f.name: f for f in self._df.schema.fields}
         return [c for c in self._data_cols if _is_numeric(by_name[c])]
 
-    def _value(self, name: str) -> Column:
-        """A data column normalized for weighted math: cast to double,
-        NaN→NULL for float inputs (pandas treats NaN as missing; Spark
-        aggregates skip only NULL)."""
+    def _value_sql(self, name: str) -> _stats.Sql:
+        """A data column normalized for weighted math, as SQL text: cast
+        to double, NaN→NULL for float inputs (pandas treats NaN as
+        missing; Spark aggregates skip only NULL)."""
         field = next(f for f in self._df.schema.fields if f.name == name)
-        col = F.col(name).cast("double")
+        col = _stats.ident(name).cast("double")
         if self._nan_as_null and _is_float(field):
-            col = F.nanvl(col, F.lit(None).cast("double"))
+            col = _stats.call("nanvl", col, _NULL_DOUBLE)
         return col
+
+    def _value(self, name: str) -> Column:
+        """Column form of :meth:`_value_sql`."""
+        return F.expr(self._value_sql(name).text)
+
+    def _stat_columns(self, cols: Sequence[str], builders) -> list[Column]:
+        """Aggregate output columns ``{col}{suffix}`` for every column and
+        every ``(suffix, builder(x, w))`` pair, column-major. Each is ONE
+        parsed ``F.expr`` of the kernel's SQL text."""
+        out = []
+        for c in cols:
+            x = self._value_sql(c)
+            for suffix, builder in builders:
+                out.append(_stats.named(builder(x, WEIGHT_SQL), f"{c}{suffix}"))
+        return out
 
     def _agg_1row(self, builder, subset: Optional[Sequence[str]]) -> DataFrame:
         cols = list(subset) if subset is not None else self.numeric_columns()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        w = self.weights
-        return self._df.agg(*[builder(self._value(c), w).alias(c) for c in cols])
+        return self._df.agg(*self._stat_columns(cols, [("", builder)]))
 
     # -- row-wise (axis=1) statistics ----------------------------------------
     #
@@ -292,7 +313,7 @@ class WeightedDataFrame:
         trivially cross-joined). Grouped variant:
         ``WeightedGroupBy.describe`` (with the binned 100 TB switch).
         """
-        from pandas_weights_spark.groupby import _KERNELS
+        from pandas_weights_spark.groupby import kernels
         from pandas_weights_spark.quantile import (
             quantile_col_name,
             weighted_quantiles,
@@ -302,14 +323,10 @@ class WeightedDataFrame:
         cols = list(subset) if subset is not None else self.numeric_columns()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        w = self.weights
-        stats = ["count", "mean", "std", "min", "max"]
         moments = self._df.agg(
-            *[
-                _KERNELS[s](self._value(c), w).alias(f"{c}_{s}")
-                for c in cols
-                for s in stats
-            ]
+            *self._stat_columns(
+                cols, kernels(["count", "mean", "std", "min", "max"])
+            )
         )
         quants = weighted_quantiles(self, qs, subset=cols)
         joined = moments.crossJoin(quants)
@@ -663,7 +680,9 @@ class WeightedDataFrame:
         frame.py:505-510)."""
         num = set(self.numeric_columns())
         exprs = [
-            (self._value(c) * self.weights).alias(c) if c in num else F.col(c)
+            _stats.named(self._value_sql(c) * WEIGHT_SQL, c)
+            if c in num
+            else F.col(c)
             for c in self._data_cols
         ]
         return self._df.select(*exprs)

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING, Callable, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
@@ -30,8 +30,9 @@ if TYPE_CHECKING:
 
 __all__ = ["WeightedGroupBy"]
 
-#: statistic name → kernel builder (x, w, **kwargs) -> Column
-_KERNELS: dict[str, Callable[..., Column]] = {
+#: statistic name → kernel builder (x, w, **kwargs) -> expression
+#: (SQL text for text operands, a Column for Column operands)
+_KERNELS: dict[str, Callable[..., _stats.Expr]] = {
     "count": lambda x, w, **k: _stats.w_count(x, w, skipna=k.get("skipna", True)),
     "sum": lambda x, w, **k: _stats.w_sum(x, w, min_count=k.get("min_count", 0)),
     "mean": lambda x, w, **k: _stats.w_mean(x, w, skipna=k.get("skipna", True)),
@@ -51,6 +52,19 @@ _KERNELS: dict[str, Callable[..., Column]] = {
     "gmean": lambda x, w, **k: _stats.w_gmean(x, w),
     "hmean": lambda x, w, **k: _stats.w_hmean(x, w),
 }
+
+
+def kernels(stats: Sequence[str], **kwargs) -> list[tuple[str, Callable]]:
+    """``(suffix, builder(x, w))`` pairs for the named statistics, with
+    ``kwargs`` (``ddof``/``skipna``/``min_count``) bound — the input
+    :meth:`WeightedDataFrame._stat_columns` expects."""
+    bad = [s for s in stats if s not in _KERNELS]
+    if bad:
+        raise ValueError(f"unknown statistics: {bad}")
+    return [
+        (f"_{s}", lambda x, w, _k=_KERNELS[s]: _k(x, w, **kwargs))
+        for s in stats
+    ]
 
 
 def _join_group_stats(
@@ -134,8 +148,13 @@ class WeightedGroupBy:
     def _grouped(self):
         df = self._wdf.df
         if self._dropna:
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
+            df = df.where(
+                F.expr(
+                    " AND ".join(
+                        f"{_stats.quote(k)} IS NOT NULL" for k in self._keys
+                    )
+                )
+            )
         keys = [F.col(k) for k in self._keys]
         if self._mode == "cube":
             return df.cube(*keys)
@@ -148,13 +167,13 @@ class WeightedGroupBy:
             out = out.orderBy(*self._keys)
         return out
 
-    def _agg(self, builder: Callable[[Column, Column], Column]) -> DataFrame:
+    def _agg(self, builder: Callable[..., _stats.Expr]) -> DataFrame:
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        w = self._wdf.weights
-        exprs = [builder(self._wdf._value(c), w).alias(c) for c in cols]
-        return self._finish(self._grouped().agg(*exprs))
+        return self._finish(
+            self._grouped().agg(*self._wdf._stat_columns(cols, [("", builder)]))
+        )
 
     # -- statistics (frame.py:512-628) -----------------------------------------
 
@@ -425,15 +444,7 @@ class WeightedGroupBy:
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        bad = [s for s in stats if s not in _KERNELS]
-        if bad:
-            raise ValueError(f"unknown statistics: {bad}")
-        w = self._wdf.weights
-        exprs = [
-            _KERNELS[s](self._wdf._value(c), w, **kwargs).alias(f"{c}_{s}")
-            for c in cols
-            for s in stats
-        ]
+        exprs = self._wdf._stat_columns(cols, kernels(stats, **kwargs))
         return self._finish(self._grouped().agg(*exprs))
 
     def agg(self, spec) -> DataFrame:
@@ -450,19 +461,12 @@ class WeightedGroupBy:
             raise ValueError(
                 "agg spec must be a non-empty dict / list / str"
             )
-        w = self._wdf.weights
         exprs = []
         for c, stats in spec.items():
             if c not in self._wdf.df.columns:
                 raise KeyError(f"column {c!r} not in frame")
             stats = [stats] if isinstance(stats, str) else list(stats)
-            bad = [st for st in stats if st not in _KERNELS]
-            if bad:
-                raise ValueError(f"unknown statistics: {bad}")
-            for st in stats:
-                exprs.append(
-                    _KERNELS[st](self._wdf._value(c), w).alias(f"{c}_{st}")
-                )
+            exprs += self._wdf._stat_columns([c], kernels(stats))
         return self._finish(self._grouped().agg(*exprs))
 
     def describe(

@@ -18,12 +18,15 @@ the pivot domain comes from a driver-side ``distinct().collect()``
 from __future__ import annotations
 
 import re
+from collections import Counter
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark._stats import Sql, quote, when
+from pandas_weights_spark.frame import WEIGHT_SQL
 
 __all__ = ["weighted_pivot", "weighted_crosstab"]
 
@@ -44,6 +47,17 @@ _STATS = {
 def _slug(v) -> str:
     s = "NULL" if v is None else str(v)
     return re.sub(r"[^0-9A-Za-z_]", "_", s)
+
+
+def _check_names(what: str, names: Sequence[str], index: Sequence[str]) -> None:
+    """Refuse output cell names that repeat (two pivot values slugging
+    to the same name) or shadow an index column — either would make
+    the result's columns ambiguous."""
+    dup = {n for n, k in Counter(names).items() if k > 1} | (
+        set(names) & set(index)
+    )
+    if dup:
+        raise ValueError(f"{what} cell name collision: {sorted(dup)}")
 
 
 def weighted_pivot(
@@ -93,20 +107,27 @@ def weighted_pivot(
                 "column_values= explicitly"
             )
         column_values = [r[0] for r in rows]
-    w = wdf.weights
-    aggs = []
     single = len(stats) == 1
-    for v in column_values:
-        cond = F.col(columns).eqNullSafe(F.lit(v))
-        wv = F.when(cond, w)
-        for c in values:
-            xv = F.when(cond, wdf._value(c))
-            for s in stats:
-                name = (
-                    f"{c}_{_slug(v)}" if single else f"{c}_{_slug(v)}_{s}"
-                )
-                aggs.append(_STATS[s](xv, wv).alias(name))
-    return wdf.df.groupBy(*[F.col(k) for k in index]).agg(*aggs)
+    cells = [
+        (i, c, s, f"{c}_{_slug(v)}" if single else f"{c}_{_slug(v)}_{s}")
+        for i, v in enumerate(column_values)
+        for c in values
+        for s in stats
+    ]
+    _check_names("pivot", [name for *_, name in cells], index)
+    # pivot values are arbitrary Python objects, not SQL text: bind each
+    # once as a literal column that the cell masks reference by name
+    bound = [f"__pw_pv_{i}__" for i in range(len(column_values))]
+    df = wdf.df.withColumns(
+        {n: F.lit(v) for n, v in zip(bound, column_values)}
+    )
+    aggs = []
+    for i, c, s, name in cells:
+        cond = Sql(f"({quote(columns)} <=> {quote(bound[i])})")
+        xv = when(cond, wdf._value_sql(c))
+        wv = when(cond, WEIGHT_SQL)
+        aggs.append(_stats.named(_STATS[s](xv, wv), name))
+    return df.groupBy(*[F.col(k) for k in index]).agg(*aggs)
 
 
 def weighted_crosstab(
@@ -161,9 +182,7 @@ def weighted_crosstab(
             )
         column_values = [r[0] for r in rows]
     cells = [_slug(v) for v in column_values]
-    dup = {c for c in cells if cells.count(c) > 1} | (set(cells) & set(index))
-    if dup:
-        raise ValueError(f"crosstab cell name collision: {sorted(dup)}")
+    _check_names("crosstab", cells, index)
     w = wdf.weights
 
     base = wdf.df.groupBy(

@@ -9,9 +9,18 @@ partials (the same expressions run unchanged under Structured Streaming,
 see :mod:`pandas_weights_spark.streaming`).
 
 Origin semantics: pandas defaults to ``origin="start_day"`` (midnight of
-the first timestamp). Spark windows are epoch-aligned, so ``start_day``
-costs one tiny extra job — ``agg(min(ts))`` over a single pruned column —
-to derive the window phase. Use ``origin="epoch"`` to skip it.
+the first timestamp). Spark windows are epoch-aligned, so when the bucket
+grid depends on that first timestamp ``start_day`` costs one tiny extra
+job — ``agg(min(ts))`` over a single pruned column — to derive the window
+phase. Most rules do not need it: a fixed width that divides a day
+(``6H``, ``12H``, ``1D``, ``30min``…) has the same phase from every
+midnight, and a one-unit calendar rule (``MS``, ``QS``, ``YS``, ``ME``,
+``QE``, ``YE``) buckets by plain calendar units; those build with no
+Spark job. ``3ME``, ``2QS``, ``5H`` and the like still anchor; use
+``origin="epoch"`` to skip it there too.
+
+The bucket and the statistics are built as SQL text (see ``_stats``)
+and cross to the JVM as one parsed expression per output column.
 
 Divergence (documented, SURVEY.md §3.3): only non-empty buckets are
 emitted. pandas emits the full bucket range with NA rows; use
@@ -23,12 +32,13 @@ from __future__ import annotations
 
 import datetime as dt
 import re
-from typing import TYPE_CHECKING, Callable, Optional, Sequence, Union
+from typing import TYPE_CHECKING, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark._stats import Sql, call, ident
 
 if TYPE_CHECKING:
     from pandas_weights_spark.frame import WeightedDataFrame
@@ -155,15 +165,21 @@ class WeightedResampler:
         if self._origin == "epoch":
             base = 0
         elif self._origin == "start_day":
-            # One extra tiny job: min over a single pruned column.
-            first = self._wdf.df.agg(F.min(F.col(self._on))).collect()[0][0]
-            if first is None:
+            if 86400 % self._n == 0:
+                # every midnight is a multiple of the width: the phase
+                # does not depend on which day the data starts
                 base = 0
             else:
-                day = dt.datetime(
-                    first.year, first.month, first.day, tzinfo=dt.timezone.utc
-                )
-                base = int(day.timestamp())
+                # One extra tiny job: min over a single pruned column.
+                first = self._first_timestamp()
+                if first is None:
+                    base = 0
+                else:
+                    day = dt.datetime(
+                        first.year, first.month, first.day,
+                        tzinfo=dt.timezone.utc,
+                    )
+                    base = int(day.timestamp())
         else:
             # Naive origin = "in the data's clock" (pandas semantics);
             # naive-as-UTC is exactly the wall-clock coordinate above.
@@ -173,12 +189,20 @@ class WeightedResampler:
             base = int(ts.timestamp())
         return (base + self._offset_secs) % self._n
 
+    def _first_timestamp(self):
+        return self._wdf.df.agg(F.min(F.col(self._on))).collect()[0][0]
+
     def _anchor_month_index(self) -> int:
         """Month index (``year·12 + month − 1``) of the first timestamp —
         one tiny job over a single pruned column (pandas anchors calendar
         rules on the first observation; reference frame.py:163 accepts
-        any pandas frequency)."""
-        first = self._wdf.df.agg(F.min(F.col(self._on))).collect()[0][0]
+        any pandas frequency). A one-unit rule (``MS``, ``QE``…) buckets
+        the same from any anchor of the unit grid, so it returns 0
+        without the job."""
+        _, u, total = self._cal
+        if total == u:
+            return 0
+        first = self._first_timestamp()
         if first is None:
             return 0
         return first.year * 12 + first.month - 1
@@ -194,60 +218,60 @@ class WeightedResampler:
         Calendar rules (``"3ME"``, ``"2QS"``, ``"YE"``…) use pure
         month-index arithmetic — ``m = year·12 + month − 1`` — so the
         bucket is a row-local expression and the only extra cost is the
-        one-row anchor job. Anchoring matches pandas: start-anchored
-        rules (``MS/QS/YS``) floor the first timestamp to its unit start
-        and bucket ``P + ⌊(m−P)/N⌋·N`` (label = first day); end-anchored
+        one-row anchor job, which one-unit rules (``MS``, ``QE``…) skip:
+        their buckets are plain calendar units. Anchoring matches
+        pandas: start-anchored rules (``MS/QS/YS``) floor the first
+        timestamp to its unit start and bucket ``P + ⌊(m−P)/N⌋·N``
+        (label = first day); end-anchored
         rules (``ME/QE/YE``) anchor on the unit end ``A`` of the first
         timestamp and bucket ``A + ⌈(m−A)/N⌉·N`` (label = last day, so
         the first bucket may be a partial unit — pandas semantics,
         verified differentially). ``closed``/``label`` are fixed by the
         anchor side for calendar rules, as in pandas.
         """
-        ts = F.col(self._on)
+        return F.expr(self._bucket_sql().text)
+
+    def _bucket_sql(self) -> Sql:
+        """SQL text of :meth:`bucket`."""
+        ts = ident(self._on)
         if self._kind == "fixed":
             if self._closed == "right":
-                ts = ts - F.expr("INTERVAL 1 MICROSECOND")
+                ts = ts - Sql("INTERVAL 1 MICROSECOND")
             phase = self._start_time_seconds()
-            start = F.window(
-                ts, f"{self._n} seconds", startTime=f"{phase} seconds"
-            ).start
+            width = f"'{self._n} seconds'"
+            start = Sql(
+                f"window({ts}, {width}, {width}, '{phase} seconds').start"
+            )
             if self._label == "right":
-                start = start + F.expr(f"INTERVAL {self._n} SECOND")
+                start = start + Sql(f"INTERVAL {self._n} SECOND")
             return start
         anchor, u, total = self._cal
         m_first = self._anchor_month_index()
-        m = F.year(ts) * F.lit(12) + F.month(ts) - F.lit(1)
+        m = call("year", ts) * 12 + call("month", ts) - 1
         if anchor == "start":
             p = m_first - (m_first % u)
-            lm = F.lit(p) + F.floor((m - F.lit(p)) / F.lit(total)).cast(
-                "long"
-            ) * F.lit(total)
+            lm = p + call("floor", (m - p) / total).cast("bigint") * total
         else:
             a = m_first - (m_first % u) + (u - 1)
-            lm = F.lit(a) + F.ceil((m - F.lit(a)) / F.lit(total)).cast(
-                "long"
-            ) * F.lit(total)
-        day = F.make_date(
-            F.floor(lm / F.lit(12)).cast("int"),
-            (F.pmod(lm, F.lit(12)) + F.lit(1)).cast("int"),
-            F.lit(1),
+            lm = a + call("ceil", (m - a) / total).cast("bigint") * total
+        day = call(
+            "make_date",
+            call("floor", lm / 12).cast("int"),
+            (call("pmod", lm, 12) + 1).cast("int"),
+            1,
         )
         if anchor == "end":
-            day = F.last_day(day)
+            day = call("last_day", day)
         return day.cast("timestamp")
 
-    def _agg(
-        self, builder: Callable[[Column, Column], Column], complete: bool = False
-    ) -> DataFrame:
+    def _agg(self, builders, complete: bool = False) -> DataFrame:
         cols = [c for c in self._wdf.numeric_columns() if c != self._on]
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        w = self._wdf.weights
-        exprs = [builder(self._wdf._value(c), w).alias(c) for c in cols]
         out = (
-            self._wdf.df.where(F.col(self._on).isNotNull())
-            .groupBy(self.bucket().alias(self._on))
-            .agg(*exprs)
+            self._wdf.df.where(F.expr(f"{ident(self._on)} IS NOT NULL"))
+            .groupBy(_stats.named(self._bucket_sql(), self._on))
+            .agg(*self._wdf._stat_columns(cols, builders))
         )
         if complete:
             out = self._complete(out)
@@ -293,24 +317,27 @@ class WeightedResampler:
 
     def count(self, skipna: bool = True, complete: bool = False) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_count(x, w, skipna=skipna), complete=complete
+            [("", lambda x, w: _stats.w_count(x, w, skipna=skipna))],
+            complete=complete,
         )
 
     def sum(self, min_count: int = 0, complete: bool = False) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_sum(x, w, min_count=min_count), complete=complete
+            [("", lambda x, w: _stats.w_sum(x, w, min_count=min_count))],
+            complete=complete,
         )
 
     def mean(self, skipna: bool = True, complete: bool = False) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_mean(x, w, skipna=skipna), complete=complete
+            [("", lambda x, w: _stats.w_mean(x, w, skipna=skipna))],
+            complete=complete,
         )
 
     def var(
         self, ddof: int = 1, skipna: bool = True, complete: bool = False
     ) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_var(x, w, ddof=ddof, skipna=skipna),
+            [("", lambda x, w: _stats.w_var(x, w, ddof=ddof, skipna=skipna))],
             complete=complete,
         )
 
@@ -318,7 +345,7 @@ class WeightedResampler:
         self, ddof: int = 1, skipna: bool = True, complete: bool = False
     ) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_std(x, w, ddof=ddof, skipna=skipna),
+            [("", lambda x, w: _stats.w_std(x, w, ddof=ddof, skipna=skipna))],
             complete=complete,
         )
 
@@ -374,26 +401,9 @@ class WeightedResampler:
         """Several statistics in one bucket-keyed aggregate pass.
         ``complete=True`` joins the generated bucket spine so empty
         buckets appear (NULL statistics), like the single-stat paths."""
-        from pandas_weights_spark.groupby import _KERNELS
+        from pandas_weights_spark.groupby import kernels
 
-        cols = [c for c in self._wdf.numeric_columns() if c != self._on]
-        bad = [s for s in stats if s not in _KERNELS]
-        if bad:
-            raise ValueError(f"unknown statistics: {bad}")
-        w = self._wdf.weights
-        exprs = [
-            _KERNELS[s](self._wdf._value(c), w, **kwargs).alias(f"{c}_{s}")
-            for c in cols
-            for s in stats
-        ]
-        out = (
-            self._wdf.df.where(F.col(self._on).isNotNull())
-            .groupBy(self.bucket().alias(self._on))
-            .agg(*exprs)
-        )
-        if complete:
-            out = self._complete(out)
-        return out.orderBy(self._on)
+        return self._agg(kernels(stats, **kwargs), complete=complete)
 
 
 def hypertable_rollup(

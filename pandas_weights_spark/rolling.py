@@ -43,6 +43,15 @@ __all__ = ["WeightedRolling"]
 _ColRef = Union[str, Column]
 
 
+def as_refs(refs: Union[_ColRef, Sequence[_ColRef]]) -> list[_ColRef]:
+    """``order_by``/``partition_by`` as a list: a single column name or
+    Column is a one-element list (``list("ts")`` would split the name
+    into characters)."""
+    if isinstance(refs, (str, Column)):
+        return [refs]
+    return list(refs)
+
+
 def _cols(refs: Sequence[_ColRef]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in refs]
 
@@ -75,12 +84,13 @@ class WeightedRolling:
     ) -> None:
         if window is not None and window < 1:
             raise ValueError("window must be >= 1")
+        order_by = as_refs(order_by)
         if not order_by:
             raise ValueError("rolling/expanding requires order_by columns")
         self._wdf = wdf
         self._window = window
-        self._order_by = list(order_by)
-        self._partition_by = list(partition_by)
+        self._order_by = order_by
+        self._partition_by = as_refs(partition_by)
         if min_periods is None:
             min_periods = window if window is not None else 1
         self._min_periods = int(min_periods)

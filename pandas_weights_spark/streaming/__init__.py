@@ -32,8 +32,9 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pandas_weights_spark._stats import quote, str_lit
 from pandas_weights_spark.frame import WEIGHT_COL, wt
-from pandas_weights_spark.groupby import _KERNELS
+from pandas_weights_spark.groupby import kernels
 from pandas_weights_spark.resample import parse_rule
 
 __all__ = [
@@ -75,24 +76,16 @@ def weighted_resample_stream(
     kind, secs = parse_rule(rule)
     if kind != "fixed":
         raise ValueError("streaming resample supports fixed-frequency rules only")
-    bad = [s for s in stats if s not in _KERNELS]
-    if bad:
-        raise ValueError(f"unknown statistics: {bad}")
+    builders = kernels(stats, **stat_kwargs)
 
     wdf = wt(stream, weights, na_weight=na_weight)
     cols = value_cols or [c for c in wdf.numeric_columns() if c != on]
     if not cols:
         raise ValueError("no numeric columns to aggregate")
-    w = wdf.weights
-    exprs = [
-        _KERNELS[s](wdf._value(c), w, **stat_kwargs).alias(f"{c}_{s}")
-        for c in cols
-        for s in stats
-    ]
     return (
         wdf.df.withWatermark(on, watermark)
-        .groupBy(F.window(F.col(on), f"{secs} seconds"))
-        .agg(*exprs)
+        .groupBy(F.expr(f"window({quote(on)}, '{secs} seconds') AS window"))
+        .agg(*wdf._stat_columns(cols, builders))
         .withColumn("window_start", F.col("window.start"))
         .drop("window")
     )
@@ -113,22 +106,17 @@ def weighted_groupby_stream(
     The watermark on ``on`` bounds state; output mode ``update`` emits
     refreshed rows per trigger.
     """
+    builders = kernels(stats, **stat_kwargs)
     wdf = wt(stream, weights)
     cols = value_cols or [
         c for c in wdf.numeric_columns() if c not in keys and c != on
     ]
     if not cols:
         raise ValueError("no numeric columns to aggregate")
-    w = wdf.weights
-    exprs = [
-        _KERNELS[s](wdf._value(c), w, **stat_kwargs).alias(f"{c}_{s}")
-        for c in cols
-        for s in stats
-    ]
     return (
         wdf.df.withWatermark(on, watermark)
         .groupBy(*keys)
-        .agg(*exprs)
+        .agg(*wdf._stat_columns(cols, builders))
     )
 
 
@@ -152,27 +140,22 @@ def weighted_session_stream(
 
     Works identically on a batch DataFrame (no watermark needed there).
     """
-    bad = [s for s in stats if s not in _KERNELS]
-    if bad:
-        raise ValueError(f"unknown statistics: {bad}")
+    builders = kernels(stats, **stat_kwargs)
     wdf = wt(stream, weights)
     cols = value_cols or [
         c for c in wdf.numeric_columns() if c not in keys and c != on
     ]
     if not cols:
         raise ValueError("no numeric columns to aggregate")
-    w = wdf.weights
-    exprs = [
-        _KERNELS[s](wdf._value(c), w, **stat_kwargs).alias(f"{c}_{s}")
-        for c in cols
-        for s in stats
-    ]
     df = wdf.df
     if df.isStreaming:
         df = df.withWatermark(on, watermark)
+    session = F.expr(
+        f"session_window({quote(on)}, {str_lit(gap)}) AS session_window"
+    )
     return (
-        df.groupBy(*keys, F.session_window(F.col(on), gap))
-        .agg(*exprs)
+        df.groupBy(*keys, session)
+        .agg(*wdf._stat_columns(cols, builders))
         .withColumn("session_start", F.col("session_window.start"))
         .withColumn("session_end", F.col("session_window.end"))
         .drop("session_window")

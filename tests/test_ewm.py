@@ -226,6 +226,30 @@ def test_parametrizations():
         resolve_alpha(alpha=0.1, span=5)
 
 
+@pytest.mark.parametrize("form", ["str", "column"])
+def test_bare_order_by_and_partition_by(spark, form):
+    # a single name/Column is a one-element list (list("i") would split
+    # a longer name into characters and fail to resolve)
+    pdf = _pdf(seed=3, n=60).rename(columns={"i": "ts", "g": "key"})
+    sdf = spark.createDataFrame(pdf)
+    order = "ts" if form == "str" else F.col("ts")
+
+    def run(order_by, partition_by):
+        # a Column order_by is not carried into the output, so compare
+        # the value multisets
+        out = (
+            wt(sdf, "w")
+            .ewm(order_by=order_by, partition_by=partition_by, alpha=0.3)
+            .mean()
+            .toPandas()
+        )
+        return np.sort(out["x"].to_numpy())
+
+    np.testing.assert_array_equal(
+        run(order, "key"), run(["ts"], ["key"])
+    )
+
+
 def test_no_order_by_raises(spark):
     pdf = _pdf()
     sdf = spark.createDataFrame(pdf)

@@ -90,6 +90,30 @@ class TestVsPandas:
         with pytest.raises(KeyError):
             wdf.groupby("g").pivot("missing", values=["x"])
 
+    def test_slug_collision_raises(self, spark):
+        # "a b" and "a_b" both slug to x_a_b: refuse up front instead of
+        # emitting two same-named columns (AMBIGUOUS_REFERENCE later)
+        df = spark.createDataFrame(
+            [("g1", "a b", 1.0, 1.0), ("g1", "a_b", 2.0, 1.0)],
+            "g string, cat string, x double, w double",
+        )
+        wdf = wt(df, "w")
+        with pytest.raises(ValueError, match="pivot cell name collision"):
+            wdf.groupby("g").pivot(
+                "cat", values=["x"], column_values=["a b", "a_b"]
+            )
+        with pytest.raises(ValueError, match=r"\['x_a_b'\]"):
+            wdf.groupby("g").pivot("cat", values=["x"])
+
+    def test_cell_shadowing_index_raises(self, spark):
+        df = spark.createDataFrame(
+            [("g1", "1", 1.0, 1.0)], "x_1 string, cat string, x double, w double"
+        )
+        with pytest.raises(ValueError, match="collision"):
+            wt(df, "w").groupby("x_1").pivot(
+                "cat", values=["x"], column_values=["1"]
+            )
+
     def test_plan_single_aggregate(self, spark):
         import pandas_weights_spark.plans as P
 

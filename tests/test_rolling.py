@@ -80,6 +80,34 @@ class TestRolling:
         assert [r["x"] for r in out] == [approx(1.0), approx(3.0), approx(20.0)]
         assert out[0]["g"] == "a" and out[2]["g"] == "b"
 
+    @pytest.mark.parametrize("form", ["str", "column"])
+    def test_bare_order_and_partition_refs(self, spark, form):
+        # a single name/Column is a one-element list, not a character
+        # sequence ("ts" once split into t, s -> UNRESOLVED_COLUMN)
+        df = spark.createDataFrame(
+            [("a", 1, 1.0, 1.0), ("a", 2, 2.0, 3.0), ("a", 3, 4.0, 1.0),
+             ("b", 1, 10.0, 2.0), ("b", 2, 7.0, 1.0)],
+            "key string, ts int, x double, w double",
+        )
+        ref = {"str": lambda c: c, "column": F.col}[form]
+        wdf = wt(df, "w")
+
+        def values(stats):
+            # a Column ref is not carried into the output: compare the
+            # value multisets
+            return sorted(r["x"] for r in stats.mean().collect())
+
+        assert values(
+            wdf.rolling(
+                2, order_by=ref("ts"), partition_by=ref("key"), min_periods=1
+            )
+        ) == values(
+            wdf.rolling(2, order_by=["ts"], partition_by=["key"], min_periods=1)
+        )
+        assert values(
+            wdf.expanding(order_by=ref("ts"), partition_by=ref("key"))
+        ) == values(wdf.expanding(order_by=["ts"], partition_by=["key"]))
+
     def test_window_validation(self, ts):
         with pytest.raises(ValueError):
             wt(ts, "w").rolling(0, order_by=["t"])
